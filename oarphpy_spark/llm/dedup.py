@@ -129,9 +129,21 @@ def minhash_candidate_pairs(
     the corpus-proportional part — so one session running several of
     them should pay that derivation once, like the graph family's
     shared edge relation). The caller owns its lifecycle: no persist
-    here and no ``_oarphpy_persisted`` ride-along."""
+    here and no ``_oarphpy_persisted`` ride-along. When ``buckets`` is
+    given, ``df``, ``text_col``, ``id_col``, ``num_hashes``, ``bands``
+    and ``shingle_n`` are ignored (the relation already fixed them
+    when it was built), and its schema must be
+    ``minhash_band_buckets``' — checked on the driver, without running
+    a job."""
     shared_buckets = buckets is not None
-    if not shared_buckets:
+    if shared_buckets:
+        got = dict(buckets.dtypes)
+        if "doc" not in got or (got.get("band"), got.get("h")) != ("int", "string"):
+            raise ValueError(
+                "buckets must have minhash_band_buckets' columns doc, "
+                f"band int and h string; got {buckets.dtypes}"
+            )
+    else:
         buckets = minhash_band_buckets(
             df, text_col, id_col, num_hashes, bands, shingle_n
         )

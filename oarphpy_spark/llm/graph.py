@@ -36,7 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from oarphpy_spark.util.checkpoints import truncate_lineage
+from oarphpy_spark.util.checkpoints import release_checkpoint, truncate_lineage
 
 
 def _check_canonical(e: DataFrame, who: str) -> DataFrame:
@@ -65,20 +65,6 @@ def _check_canonical(e: DataFrame, who: str) -> DataFrame:
         )
     return e
 
-
-def _unpersist_checkpoint(df: DataFrame) -> None:
-    """Best-effort release of the executor blocks behind an eager
-    ``localCheckpoint`` (same mechanism as
-    ``queries.graph_queries._release_checkpoint``): the checkpointed
-    Dataset wraps a ``LogicalRDD`` whose backing RDD holds the blocks;
-    unpersisting it frees them deterministically instead of waiting on
-    driver GC + ContextCleaner. No-op (swallowed) for reliable
-    checkpoints and already-released frames. The DataFrame is unusable
-    afterwards — callers only release frames that nothing references."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — best-effort teardown
-        pass
 
 _SRC, _DST = "__cc_src", "__cc_dst"
 
@@ -538,17 +524,23 @@ def kcore(
     every node keeps >= k neighbors (dense-community extraction,
     spam/bot-ring mining, graph sparsification preprocessing).
 
-    Each round is one degree aggregation + two semi-joins keyed on
-    node id — hash-partitioned, no adjacency lists, and the edge set
-    only SHRINKS, so rounds get cheaper as peeling cascades.
-    Per-round driver work is a 1-row edge count (the convergence
-    check); lineage is truncated per round as in the other iterative
-    operators (``reliable`` selects durable vs local truncation, see
-    ``util/checkpoints``). Raises if ``max_iter`` rounds don't reach
-    the fixpoint — callers (and the unrolled SQL oracle, whose round
-    count must be >= the real one; extra unrolled rounds are no-ops
-    at the fixpoint because peeling is monotone) rely on convergence
-    being VERIFIED, not assumed.
+    Each round computes the degree table once (one aggregation keyed
+    on node id), truncated lazily so the round's 1-row convergence
+    check — the minimum degree — materializes it. If no node has
+    degree < k the loop stops and that degree table IS the result;
+    otherwise two semi-joins against the same table peel the edge set,
+    which only SHRINKS, so rounds get cheaper as peeling cascades. A
+    graph already at its fixpoint therefore costs one round, and the
+    result is a scan of the last round's checkpoint. Lineage is
+    truncated per round as in the other iterative operators
+    (``reliable`` selects durable vs local truncation, see
+    ``util/checkpoints``); each superseded round's checkpoints are
+    released once the next round is materialized. Raises if the
+    degree check has not passed after ``max_iter`` rounds — callers
+    (and the unrolled SQL oracle, whose peel count must be >= the real
+    one; extra unrolled rounds are no-ops at the fixpoint because
+    peeling is monotone) rely on convergence being VERIFIED, not
+    assumed.
 
     Returns (node, core_deg): surviving nodes with their in-core
     degree (>= k by construction); empty when no k-core exists.
@@ -572,33 +564,36 @@ def kcore(
             .distinct()
         )
         e = truncate_lineage(e, reliable=reliable)
-    n_prev = e.count()
+    e_owned = not input_canonical  # the caller's input is not ours to free
+    stale: list[DataFrame] = []  # the previous round's checkpoints
     for _ in range(max_iter):
-        sym = e.select(F.col("lo").alias("v")).unionByName(
-            e.select(F.col("hi").alias("v"))
-        )
-        keep = (
-            sym.groupBy("v")
-            .agg(F.count("*").alias("__d"))
-            .filter(F.col("__d") >= k)
-            .select("v")
-        )
-        e_next = truncate_lineage(
-            e.join(keep.withColumnRenamed("v", "lo"), "lo", "left_semi")
-            .join(keep.withColumnRenamed("v", "hi"), "hi", "left_semi"),
+        deg = truncate_lineage(
+            e.select(F.col("lo").alias("node"))
+            .unionByName(e.select(F.col("hi").alias("node")))
+            .groupBy("node")
+            .agg(F.count("*").alias("core_deg")),
+            eager=False,
             reliable=reliable,
         )
-        n = e_next.count()
-        e = e_next
-        if n == n_prev:
-            break
-        n_prev = n
-    else:
-        raise RuntimeError(f"kcore did not converge in {max_iter} rounds")
-    sym = e.select(F.col("lo").alias("node")).unionByName(
-        e.select(F.col("hi").alias("node"))
-    )
-    return sym.groupBy("node").agg(F.count("*").alias("core_deg"))
+        min_deg = deg.agg(F.min("core_deg")).collect()[0][0]
+        # This round's edge set and degree table are materialized now,
+        # so nothing reads the previous round's any more.
+        for df in stale:
+            release_checkpoint(df)
+        if min_deg is None or min_deg >= k:
+            if e_owned:
+                release_checkpoint(e)
+            return deg
+        stale = [deg, e] if e_owned else [deg]
+        keep = deg.filter(F.col("core_deg") >= k).select("node")
+        e = truncate_lineage(
+            e.join(keep.withColumnRenamed("node", "lo"), "lo", "left_semi")
+            .join(keep.withColumnRenamed("node", "hi"), "hi", "left_semi"),
+            eager=False,
+            reliable=reliable,
+        )
+        e_owned = True
+    raise RuntimeError(f"kcore did not converge in {max_iter} rounds")
 
 
 # Max degree up to which ktruss computes per-edge support via
@@ -877,7 +872,7 @@ def ktruss(
             # (ADVICE r15): only the final sup/e pair stays alive for
             # the return join.
             for df in old_ckpts + prev_ckpts:
-                _unpersist_checkpoint(df)
+                release_checkpoint(df)
             e = e_next
             break
         # Incremental maintenance pays work proportional to the
@@ -902,7 +897,7 @@ def ktruss(
         # (ADVICE r15 — the reverted enumerate-once experiment measured
         # reps degrading 13 -> 37 s from exactly this accumulation).
         for df in old_ckpts:
-            _unpersist_checkpoint(df)
+            release_checkpoint(df)
         old_ckpts = prev_ckpts
         prev_ckpts = made
         e = e_next

@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import table
+from oarphpy_spark.util.checkpoints import release_checkpoint
 
 _COPURCHASE_EDGES_SQL = """
       SELECT DISTINCT a.l_partkey AS s, b.l_partkey AS d
@@ -84,20 +85,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LP_SHARED: dict[tuple[str, str], dict[str, DataFrame]] = {}
 
 
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free the executor-side blocks backing an eager
-    ``localCheckpoint``. The checkpointed Dataset wraps a
-    ``LogicalRDD`` over the persisted internal-row RDD;
-    ``plan.rdd().unpersist()`` drops those blocks deterministically
-    (verified: persistent-RDD count goes to 0). The DataFrame is
-    unusable afterwards (lineage was truncated), so callers must also
-    drop every reference — release then rebuild, never reuse."""
-    try:
-        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
-    except Exception:  # noqa: BLE001 — best-effort on a dying session
-        pass
-
-
 def release_shared_edges(
     spark: SparkSession, sf_dir: str | None = None
 ) -> int:
@@ -125,7 +112,7 @@ def release_shared_edges(
         if not stale:  # stale app: JVM-side blocks died with its context
             dropped += 1
             for df in entry.values():
-                _release_checkpoint(df)
+                release_checkpoint(df)
     # Wedge-exchange sizing memos ride the same lifecycle: they were
     # derived from the (now released) degree table, so drop them for
     # every (app, sf_dir) the loop above released.
@@ -359,10 +346,11 @@ def _kcore_oracle(k: int, rounds: int) -> str:
     """Unrolled peel: each CTE round re-derives degrees and keeps
     edges whose BOTH endpoints have degree >= k. Peeling is monotone
     and idempotent at the fixpoint, so unrolling MORE rounds than the
-    data needs is a no-op — the round count here just has to be an
-    upper bound (the engine-side operator verifies convergence and
-    raises past its bound, so a too-small unroll shows up as a loud
-    parity failure, never a silent wrong answer)."""
+    data needs is a no-op — ``rounds`` just has to be an upper bound
+    on the engine's peel rounds (the engine-side operator stops only
+    when its degree check finds no node below k and raises past its
+    bound, so a too-small unroll shows up as a loud parity failure,
+    never a silent wrong answer)."""
     step = """
     e{i} AS MATERIALIZED (
       SELECT e.lo, e.hi FROM e{p} e
@@ -394,14 +382,16 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-core of the co-purchase graph by iterative peeling
     (llm/graph.py:kcore — distributed Batagelj-Zaversnik): drop
     nodes with fewer than 60 in-core neighbors until the fixpoint,
-    convergence VERIFIED per round with a 1-row edge count (raises
-    past the bound — a silent partial peel would misreport the
-    core). Each round is a degree agg + two semi-joins keyed on node
-    id over an edge set that only shrinks. The oracle unrolls six
-    peel rounds — more than the measured fixpoint (2 rounds at every
-    fixture SF); monotonicity makes the extra rounds no-ops, and an
-    insufficient unroll would fail parity loudly rather than agree
-    wrongly. Dense-community extraction / bot-ring mining shape."""
+    convergence VERIFIED per round with a 1-row minimum-degree check
+    (raises past the bound — a silent partial peel would misreport
+    the core). Each round is a degree agg, then — unless no node is
+    below 60, when that degree table is the result — two semi-joins
+    keyed on node id over an edge set that only shrinks. The oracle
+    unrolls six peel rounds — more than the measured fixpoint (one
+    peel, then a passing degree check, at every fixture SF);
+    monotonicity makes the extra rounds no-ops, and an insufficient
+    unroll would fail parity loudly rather than agree wrongly.
+    Dense-community extraction / bot-ring mining shape."""
     from oarphpy_spark.llm.graph import kcore
 
     # input_canonical: the shared edge relation is s < d, distinct
@@ -966,7 +956,13 @@ def _wedge_agg_partitions(
     ``sample_t`` sizes the sketch path (a center contributes at most
     C(T, 2) wedges after top-T sampling). Floor of 2x
     defaultParallelism keeps small inputs fully parallel; the result
-    scales with wedge volume, never with the local core count."""
+    scales with wedge volume, never with the local core count.
+    Exactly one of ``degree_cap`` / ``sample_t`` must be given."""
+    if (degree_cap is None) == (sample_t is None):
+        raise ValueError(
+            "_wedge_agg_partitions needs exactly one of degree_cap / "
+            f"sample_t; got degree_cap={degree_cap}, sample_t={sample_t}"
+        )
     key = (spark.sparkContext.applicationId, sf_dir, degree_cap, sample_t)
     if key not in _LP_WEDGE_N:
         _, _, deg = _lp_shared_relations(spark, sf_dir)

@@ -30,6 +30,7 @@ from oarphpy_spark.llm.similarity import (
 from oarphpy_spark.operators.prefix import with_global_cumsum
 from oarphpy_spark.registry import query
 from oarphpy_spark.tables import table
+from oarphpy_spark.util.checkpoints import release_checkpoint
 
 # Offline artifacts of the ANN indexes, cached per scale-factor dir:
 # embedding dimensionality and the IVF centroid table (tiny: n_cells
@@ -76,8 +77,6 @@ def release_shared_buckets(
     ``release_shared_edges`` counterpart for the dedup-LSH family.
     Returns the number of live entries dropped; the next family query
     simply rebuilds."""
-    from oarphpy_spark.queries.graph_queries import _release_checkpoint
-
     app = spark.sparkContext.applicationId
     dropped = 0
     for key in list(_MINHASH_SHARED):
@@ -87,7 +86,7 @@ def release_shared_buckets(
         df = _MINHASH_SHARED.pop(key)
         if not stale:
             dropped += 1
-            _release_checkpoint(df)
+            release_checkpoint(df)
     return dropped
 
 

@@ -10,6 +10,7 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Footer-probe cache: (path, mtime_ns, size) -> one of
 # 'ns' | 'ntz' | 'utc' | 'none'.  Keyed on stat so a regenerated
@@ -72,6 +73,58 @@ def _events_ts_kind(path: str) -> str:
         )
     return kinds.pop()
 
+
+# Session confs that change the schema Spark infers from a parquet
+# footer; their values are part of the schema-memo key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# Schema memo: (path, part-file stamps, inference conf values) -> the
+# StructType Spark inferred on the first read. Keyed like
+# _TS_KIND_CACHE, on stat, so a regenerated fixture re-infers.
+_SCHEMA_CACHE: dict[tuple, StructType] = {}
+
+
+def _part_stamps(path: str) -> tuple:
+    """(file, inode, size, mtime_ns) of every file Spark would scan
+    under ``path``: the file itself, or a directory tree's non-hidden
+    files."""
+    files = [path]
+    if os.path.isdir(path):
+        files = []
+        for root, dirs, names in os.walk(path):
+            dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
+            files += [
+                os.path.join(root, n)
+                for n in names
+                if not n.startswith((".", "_"))
+            ]
+    stamps = []
+    for f in sorted(files):
+        st = os.stat(f)
+        stamps.append((f, st.st_ino, st.st_size, st.st_mtime_ns))
+    return tuple(stamps)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only on the
+    first read of each file version: later reads pass Spark's own
+    inferred ``StructType`` back, which fires no inference job."""
+    confs = tuple(spark.conf.get(k) for k in _INFERENCE_CONFS)
+    key = (path, _part_stamps(path), confs)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[key] = df.schema
+    return df
+
+
 TABLE_NAMES = (
     "region",
     "nation",
@@ -92,6 +145,13 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one table. Plain ``spark.read.parquet`` so Catalyst gets a
     pushdown-capable FileScan (predicates + column pruning reach the
     parquet reader).
+
+    Only the first read of a table file infers its schema (one Spark
+    job). The inferred ``StructType`` is memoized on the path, each
+    part file's inode, size and mtime, and the confs that change
+    inference (``_INFERENCE_CONFS``); every later call passes it to
+    ``spark.read.schema``, so composing a query over already-seen
+    tables fires no job.
 
     ``events.ts`` arrives in whatever physical form the fixture
     generator used, and that has varied across driver regenerations;
@@ -125,7 +185,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name != "events":
-        return spark.read.parquet(path)
+        return _read_parquet(spark, path)
 
     from pyspark.sql import functions as F
 
@@ -135,7 +195,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         prior = spark.conf.get(conf_key, None)
         spark.conf.set(conf_key, "true")
         try:
-            df = spark.read.parquet(path)
+            df = _read_parquet(spark, path)
         finally:
             if prior is None:
                 spark.conf.unset(conf_key)
@@ -144,7 +204,7 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Same ns→µs truncation DuckDB applies.
         df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     else:
-        df = spark.read.parquet(path)
+        df = _read_parquet(spark, path)
         if kind == "ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df

@@ -57,6 +57,21 @@ def clear_checkpoint_dir(spark) -> None:
     getattr(jsc, "checkpointDir_$eq")(none_opt)
 
 
+def release_checkpoint(df: DataFrame) -> None:
+    """Free the executor-side blocks behind an eager or materialized
+    ``localCheckpoint`` now, instead of waiting on driver GC and the
+    ContextCleaner. The checkpointed Dataset wraps a ``LogicalRDD``
+    over the persisted internal-row RDD; unpersisting that RDD drops
+    its blocks. Best-effort: a no-op for reliable checkpoints and
+    already-released frames. The DataFrame is unusable afterwards
+    (its lineage was truncated), so callers release only frames that
+    nothing references any more."""
+    try:
+        df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+    except Exception:  # noqa: BLE001 — best-effort teardown
+        pass
+
+
 def truncate_lineage(
     df: DataFrame,
     *,

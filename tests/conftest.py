@@ -54,3 +54,20 @@ def spark():
 
     spark = TestSession.getOrCreate()
     yield spark
+
+
+def jobs_fired(spark, fn):
+    """Run ``fn()`` and return ``(result, number of Spark jobs it
+    fired)``, counted through a one-off job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-fired-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

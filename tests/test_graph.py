@@ -231,12 +231,29 @@ def test_triangle_count_empty_graph(spark):
 
 
 def test_kcore_known_graphs(spark):
+    _check_kcore_known_graphs(spark, None)
+
+
+def test_kcore_known_graphs_reliable(spark, tmp_path):
+    """The same graphs under reliable truncation (checkpoint dir set),
+    where each round's lazy checkpoints go through the directory."""
+    from oarphpy_spark.util.checkpoints import clear_checkpoint_dir
+
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        _check_kcore_known_graphs(spark, True)
+    finally:
+        clear_checkpoint_dir(spark)
+
+
+def _check_kcore_known_graphs(spark, reliable):
     from oarphpy_spark.llm.graph import kcore
 
     def run(edges, k):
         df = spark.createDataFrame(edges, "src long, dst long")
         return {
-            (r.node, r.core_deg) for r in kcore(df, k).collect()
+            (r.node, r.core_deg)
+            for r in kcore(df, k, reliable=reliable).collect()
         }
 
     # K4 plus a pendant chain: 3-core = the K4, pendant peels away
@@ -250,9 +267,7 @@ def test_kcore_known_graphs(spark):
     assert run(cyc, 2) == {(i, 2) for i in range(5)}
     # empty input
     empty = spark.createDataFrame([], "src long, dst long")
-    from oarphpy_spark.llm.graph import kcore as _kc
-
-    assert _kc(empty, 2).count() == 0
+    assert kcore(empty, 2, reliable=reliable).count() == 0
 
 
 def test_ktruss_known_graphs(spark):
@@ -654,3 +669,16 @@ def test_triangle_count_caches_shared_subtrees(spark):
     assert all(df.storageLevel != StorageLevel.NONE for df in cached)
     release_cached(out)
     assert all(df.storageLevel == StorageLevel.NONE for df in cached)
+
+
+def test_wedge_agg_partitions_needs_exactly_one_sizing_kwarg(spark):
+    """Neither or both of degree_cap / sample_t is a caller error, not
+    a silent fallback to the parallelism floor; the check comes before
+    any Spark work."""
+    from oarphpy_spark.queries.graph_queries import _wedge_agg_partitions
+
+    from .conftest import SF_SMALL
+
+    for kwargs in ({}, {"degree_cap": 50, "sample_t": 8}):
+        with pytest.raises(ValueError, match="exactly one"):
+            _wedge_agg_partitions(spark, SF_SMALL, **kwargs)

@@ -356,3 +356,26 @@ def test_minhash_max_bucket_excludes_boilerplate(spark):
     assert all(d >= 100 for d in docs_in_pairs), capped
     uncapped = minhash_candidate_pairs(df, "text", "doc_id").collect()
     assert len(uncapped) > len(capped)  # boilerplate pairs reappear
+
+
+def test_minhash_shared_buckets_schema_checked_without_a_job(spark):
+    """A caller-supplied ``buckets`` relation is checked against
+    minhash_band_buckets' schema on the driver: a good one composes
+    with no Spark job, a mismatched one raises before any work."""
+    from oarphpy_spark.llm.dedup import minhash_band_buckets
+
+    from .conftest import jobs_fired
+
+    buckets = minhash_band_buckets(_docs(spark), "text", "doc_id").localCheckpoint()
+    pairs, n_jobs = jobs_fired(
+        spark, lambda: minhash_candidate_pairs(None, "text", "doc_id", buckets=buckets)
+    )
+    assert n_jobs == 0
+    assert {(r.doc_a, r.doc_b) for r in pairs.collect()} >= {(1, 4)}
+    for bad in (
+        buckets.drop("doc"),
+        buckets.withColumn("band", F.col("band").cast("string")),
+        buckets.withColumnRenamed("h", "hash"),
+    ):
+        with pytest.raises(ValueError, match="band int and h string"):
+            minhash_candidate_pairs(None, "text", "doc_id", buckets=bad)

@@ -226,6 +226,7 @@ def _run_hygiene_sweep(spark, names) -> None:
     undocumented: list[str] = []
     unbounded: list[str] = []
     dup_udf: list[str] = []
+    broken: list[str] = []
     qs = registry.queries()
     for name, fn in ((n, qs[n]) for n in names):
         try:
@@ -235,7 +236,8 @@ def _run_hygiene_sweep(spark, names) -> None:
             with redirect_stdout(buf):
                 df.explain("formatted")
             formatted = buf.getvalue()
-        except Exception:  # noqa: BLE001 - plan-only audit
+        except Exception as exc:  # noqa: BLE001 - reported below
+            broken.append(f"{name}: {type(exc).__name__}: {exc}"[:500])
             continue
         if "CartesianProduct" in plan:
             cartesian.append(name)
@@ -268,6 +270,9 @@ def _run_hygiene_sweep(spark, names) -> None:
                 )
             ):
                 unbounded.append(name)
+    assert not broken, "queries that fail to compose or plan:\n" + "\n".join(
+        broken
+    )
     assert not cartesian, f"CartesianProduct in: {cartesian}"
     assert not undocumented, f"undocumented unpartitioned windows: {undocumented}"
     assert not unbounded, f"unpartitioned windows over unbounded input: {unbounded}"

@@ -23,6 +23,8 @@ from pyspark.sql import functions as F
 
 from oarphpy_spark.tables import table
 
+from .conftest import jobs_fired
+
 # One logical fixture: three events, microsecond-precision wall times.
 _US = [1_700_000_000_000_000, 1_700_000_123_456_789, 1_700_003_600_000_000]
 _ROWS = {
@@ -68,19 +70,24 @@ def _forms(base: str) -> dict[str, str]:
 
 
 def test_batch_loader_normalizes_all_ts_forms(spark, tmp_path):
+    """Each form is read twice: the second read is served from the
+    schema memo (no inference job) and must load the same values."""
     got = {}
     for form, d in _forms(str(tmp_path)).items():
-        df = table(spark, d, "events")
-        assert dict(df.dtypes)["ts"] == "timestamp", form
-        got[form] = sorted(
-            (r["event_id"], r["us"])
-            for r in df.select(
-                "event_id", F.unix_micros("ts").alias("us")
-            ).collect()
-        )
+        for read in ("first", "memo"):
+            df, n_jobs = jobs_fired(spark, lambda: table(spark, d, "events"))
+            if read == "memo":
+                assert n_jobs == 0, form
+            assert dict(df.dtypes)["ts"] == "timestamp", form
+            got[form, read] = sorted(
+                (r["event_id"], r["us"])
+                for r in df.select(
+                    "event_id", F.unix_micros("ts").alias("us")
+                ).collect()
+            )
     expect = sorted(zip(_ROWS["event_id"], _US))
-    for form, rows in got.items():
-        assert rows == expect, f"{form}: {rows}"
+    for key, rows in got.items():
+        assert rows == expect, f"{key}: {rows}"
 
 
 def test_stream_source_normalizes_all_ts_forms(spark, tmp_path):
