@@ -2,18 +2,15 @@
 
 Capability parity with the reference's ``archive_rdd`` flyweights
 (reference ``oarphpy/spark.py:457-459``,
-``oarphpy/util/archive_flyweight.py:44-137``), DataFrame-native:
+``oarphpy/util/archive_flyweight.py:44-137``), DataFrame-native.
+:func:`archive_df` is a thin wrapper over the ``archive`` data source
+(:mod:`oarphpy_spark.sources.archive_v2`), which plans from member
+*names* only and reads bytes on executors; this module holds the
+byte-level member listing and reads both share.
 
-1. The driver lists member *names* only (archive central directory /
-   tar index — metadata, not data).
-2. The name listing becomes a DataFrame, partitioned for parallelism.
-3. Executors open the archive locally and read their members inside an
-   Arrow-batched ``mapInPandas`` — bytes never pass through the driver
-   (the same lazy-flyweight contract as the reference, minus RDDs).
-
-For directories of loose files use stock ``spark.read.format
-('binaryFile')`` instead — this source exists for the many-small-files-
-in-one-archive layout where per-file listing would swamp the namenode.
+For directories of loose files use Spark's stock binary-file source
+instead — this source exists for the many-small-files-in-one-archive
+layout where per-file listing would swamp the namenode.
 """
 
 from __future__ import annotations
@@ -21,13 +18,8 @@ from __future__ import annotations
 import os
 import tarfile
 import zipfile
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
-
-ARCHIVE_SCHEMA = "name string, data binary"
 
 
 def _list_members(path: str) -> list[str]:
@@ -89,27 +81,20 @@ class ArchiveFileFlyweight:
         ]
 
 
-def archive_df(
-    spark: SparkSession, path: str, n_partitions: int | None = None
-) -> DataFrame:
-    """All members of a zip/tar archive as (name STRING, data BINARY).
+def archive_df(spark: SparkSession, path: str) -> DataFrame:
+    """All members of a zip/tar archive (or a glob of them) as
+    (name STRING, data BINARY), read through the ``archive`` data
+    source.
 
-    ``path`` must be reachable from executors (shared fs / distributed
-    fs); on local mode any local path works.
+    ``path`` is a local path, resolved against the driver's working
+    directory, and must be reachable from executors (shared fs; on
+    local mode any local path works).
     """
-    path = os.path.abspath(path)
-    names = _list_members(path)
-    if n_partitions is None:
-        n_partitions = max(1, min(len(names), spark.sparkContext.defaultParallelism))
-    listing = spark.createDataFrame([(n,) for n in names], "name string").repartition(
-        n_partitions
+    from oarphpy_spark.sources import archive_v2
+
+    archive_v2.register(spark)
+    return (
+        spark.read.format("archive")
+        .load(os.path.abspath(path))
+        .select("name", "data")
     )
-
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            member_names = pdf["name"].tolist()
-            yield pd.DataFrame(
-                {"name": member_names, "data": _read_members(path, member_names)}
-            )
-
-    return listing.mapInPandas(fetch, schema=ARCHIVE_SCHEMA)

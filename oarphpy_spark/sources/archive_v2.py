@@ -1,9 +1,11 @@
 """Archives (zip/tar) as a first-class Spark data source.
 
 ``spark.read.format("archive").load("/data/*.zip")`` via PySpark 4's
-public Python DataSource API — the V2 upgrade of
-:mod:`oarphpy_spark.sources.archive` (same lazy-flyweight contract as
-the reference's ``archive_rdd``, reference ``oarphpy/spark.py:457-459`` /
+public Python DataSource API — the engine's one read path for archive
+members (:func:`oarphpy_spark.sources.archive.archive_df` wraps it; the
+member listing and reads live in :mod:`oarphpy_spark.sources.archive`).
+Same lazy-flyweight contract as the reference's ``archive_rdd``
+(reference ``oarphpy/spark.py:457-459`` /
 ``util/archive_flyweight.py:44-137``):
 
 * planning reads only archive *metadata* (zip central directory / tar
@@ -14,8 +16,8 @@ the reference's ``archive_rdd``, reference ``oarphpy/spark.py:457-459`` /
 * executors open their archive locally and emit Arrow batches — bytes
   never pass through the driver.
 
-Options: ``path`` (archive file or glob), ``membersperpartition``
-(default 256).
+Option: ``path``, an absolute archive file or glob (planning runs in
+a Python worker, whose cwd is not the driver's).
 """
 
 from __future__ import annotations
@@ -32,6 +34,8 @@ from pyspark.sql.types import (
 )
 
 from oarphpy_spark.sources.archive import _list_members, _read_members
+
+MEMBERS_PER_PARTITION = 256
 
 ARCHIVE_V2_SCHEMA = StructType(
     [
@@ -53,15 +57,15 @@ class ArchiveReader(DataSourceReader):
         self._path = options.get("path")
         if not self._path:
             raise ValueError("archive source requires a path")
-        self._per_part = int(options.get("membersperpartition", 256))
 
     def partitions(self):
         archives = sorted(_glob.glob(self._path)) or [self._path]
+        per_part = MEMBERS_PER_PARTITION
         parts: list[_MembersPartition] = []
         for ar in archives:
             names = _list_members(ar)
-            for i in range(0, len(names), self._per_part):
-                parts.append(_MembersPartition(ar, names[i : i + self._per_part]))
+            for i in range(0, len(names), per_part):
+                parts.append(_MembersPartition(ar, names[i : i + per_part]))
         return parts or [_MembersPartition(self._path, [])]
 
     def read(self, partition: _MembersPartition):

@@ -1,7 +1,9 @@
 """Streaming Python data source that REPLAYS a parquet table in
 deterministic offset slices — the streaming half of the Python
-DataSource API (the batch half is sources/archive_v2.py and
-tfrecords_v2.py).
+DataSource API. The batch half is the ``archive`` and ``tfrecords``
+sources (sources/archive_v2.py, tfrecords_v2.py), the only readers of
+those formats: ``archive_df``, ``tfrecords_df`` and ``tf_summary_df``
+wrap them.
 
 ``SimpleDataSourceStreamReader`` contract: ``read(start)`` returns
 (rows, next_offset) and Spark persists the offset range per

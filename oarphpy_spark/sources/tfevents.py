@@ -34,9 +34,10 @@ dims + encoded PNG bytes (decode with
 ``decode_image_summary``) and tensors surface dtype/shape/values, so
 neither TF nor imageio is ever required.
 
-Scan is distributed: files land on executors via the ``binaryFile``
-source and records explode in Arrow-batched ``mapInPandas`` — same
-scale shape as ``tfrecords_df``.
+Scan is distributed: :func:`tf_summary_df` reads records through
+:func:`oarphpy_spark.sources.tfrecords.tfrecords_df` (the ``tfrecords``
+data source, one task per file) and parses each one with
+:func:`parse_event` in an Arrow-batched ``mapInPandas``.
 """
 
 from __future__ import annotations
@@ -287,24 +288,20 @@ def tf_summary_df(
     ``full=True``, decoded image-summary dims/PNG-bytes and
     tensor-summary dtype/shape/values columns (the reference
     ``TFSummaryReader``'s full row shape, TF-free)."""
-    from oarphpy_spark.sources.tfrecords import iter_tfrecords
+    from oarphpy_spark.sources.tfrecords import tfrecords_df
 
-    files = spark.read.format("binaryFile").load(path_glob).select(
-        "path", "content"
-    )
+    records = tfrecords_df(spark, path_glob).select("path", "record")
     cols = _FULL_COLS if full else _SCALAR_COLS
 
     def explode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
         for pdf in batches:
-            rows = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                for rec in iter_tfrecords(io.BytesIO(content)):
-                    for r in parse_event(rec, full=full):
-                        rows.append({"path": path, **r})
+            rows = [
+                {"path": path, **r}
+                for path, rec in zip(pdf["path"], pdf["record"])
+                for r in parse_event(rec, full=full)
+            ]
             if rows:
                 yield pd.DataFrame(rows, columns=cols)
 
     schema = TFEVENTS_FULL_SCHEMA if full else TFEVENTS_SCHEMA
-    return files.mapInPandas(explode, schema=schema)
+    return records.mapInPandas(explode, schema=schema)

@@ -11,17 +11,17 @@ the public TFRecord wire format: each record is
 
 with crc32c = Castagnoli CRC-32 and mask(c) = rotr15(c) + 0xa282ead8.
 
-The DataFrame source reads archive files via ``binaryFile`` and
-explodes records executor-side in Arrow batches — no driver I/O.
+:func:`tfrecords_df` is a thin wrapper over the ``tfrecords`` data
+source (:mod:`oarphpy_spark.sources.tfrecords_v2`), which frames
+records with :func:`iter_tfrecords` on executors — no driver I/O.
 """
 
 from __future__ import annotations
 
+import os
 import struct
 from collections.abc import Iterator
 from typing import BinaryIO
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -82,26 +82,12 @@ def iter_tfrecords(fileobj: BinaryIO, verify: bool = True) -> Iterator[bytes]:
 
 
 def tfrecords_df(spark: SparkSession, path_glob: str) -> DataFrame:
-    """All records of all matched TFRecord files as
-    (path STRING, record_idx BIGINT, record BINARY) — files are read
-    and exploded on executors (binaryFile source + mapInPandas)."""
-    files = spark.read.format("binaryFile").load(path_glob).select("path", "content")
+    """All records of all TFRecord files matching ``path_glob`` as
+    (path STRING, record_idx BIGINT, record BINARY), read through the
+    ``tfrecords`` data source. ``path_glob`` is a local path, resolved
+    against the driver's working directory; ``path`` holds each file's
+    absolute path."""
+    from oarphpy_spark.sources import tfrecords_v2
 
-    def explode_records(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                recs = list(iter_tfrecords(io.BytesIO(content)))
-                if recs:
-                    yield pd.DataFrame(
-                        {
-                            "path": [path] * len(recs),
-                            "record_idx": range(len(recs)),
-                            "record": recs,
-                        }
-                    )
-
-    return files.mapInPandas(
-        explode_records, schema="path string, record_idx bigint, record binary"
-    )
+    tfrecords_v2.register(spark)
+    return spark.read.format("tfrecords").load(os.path.abspath(path_glob))

@@ -2,9 +2,11 @@
 
 ``spark.read.format("tfrecords")`` / ``df.write.format("tfrecords")``
 via PySpark 4's public ``pyspark.sql.datasource`` V2 API — the
-engine-native upgrade over the helper-function entry points in
-``oarphpy_spark.sources.tfrecords`` (which remain the byte-level
-implementation: record framing, masked crc32c, truncation checks).
+engine's one read path for TFRecord-framed files
+(:func:`oarphpy_spark.sources.tfrecords.tfrecords_df` and
+:func:`oarphpy_spark.sources.tfevents.tf_summary_df` wrap it). The
+byte-level implementation — record framing, masked crc32c, truncation
+checks — lives in ``oarphpy_spark.sources.tfrecords``.
 
 Capability parity target: the reference's TFRecord interop
 (``oarphpy/util/tfutil.py``) required the TF runtime; here the format
@@ -19,7 +21,9 @@ is plain bytes and the planner sees a real source:
   commits are append-only files — idempotent overwrite at the
   directory level, exactly like Spark's file sinks.
 
-Registration is explicit and per-session::
+``path`` is an absolute file or glob: planning runs in a Python
+worker, whose cwd is not the driver's. Registration is explicit and
+per-session::
 
     from oarphpy_spark.sources.tfrecords_v2 import register
     register(spark)
@@ -49,6 +53,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+BATCH_ROWS = 4096
+
 TFRECORDS_SCHEMA = StructType(
     [
         StructField("path", StringType()),
@@ -68,7 +74,6 @@ class TFRecordsReader(DataSourceReader):
         self._path = options.get("path")
         if not self._path:
             raise ValueError("tfrecords source requires a path")
-        self._batch_rows = int(options.get("batchrows", 4096))
 
     def partitions(self):
         # Driver-side listing. Local/posix glob here; object-store
@@ -94,7 +99,7 @@ class TFRecordsReader(DataSourceReader):
                     idxs.append(i)
                     recs.append(rec)
                     nbytes += len(rec)
-                    if len(recs) >= self._batch_rows or nbytes >= max_bytes:
+                    if len(recs) >= BATCH_ROWS or nbytes >= max_bytes:
                         yield idxs, recs
                         idxs, recs, nbytes = [], [], 0
             if recs:

@@ -55,6 +55,12 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     eagerly materialize upstream shuffle stages at composition time
     (ADVICE r15), besides reading a pre-AQE partition count that can
     mis-trigger a redundant repartition.
+
+    Known false positive: a broadcast join shuffles neither side — it
+    keeps its streamed side's scan partitions — but its plan holds a
+    ``Join``, so it is returned unchanged even when that side is
+    narrow. Apply ``spread`` to the streamed input before the join
+    when it needs the parallelism.
     """
     if _has_shuffle_ancestor(df):
         return df

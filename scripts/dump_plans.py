@@ -1,11 +1,13 @@
 #!/usr/bin/env python
 """Dump `.explain("formatted")` for every bench query (headline +
-extras) into plans/r16/<query>_<tag>.txt, where <tag> is argv[1]
-(before/after). Queries whose public wrapper eagerly materializes
-(localCheckpoint) are captured from their internal plan builders so
-the file shows the REAL computation plan, not a LogicalRDD scan.
+extras) into plans/<round>/<query>_<tag>.txt, where <round> is argv[1]
+(e.g. r16) and <tag> is argv[2] (before/after); further arguments
+restrict the dump to those query slugs. Queries whose public wrapper
+eagerly materializes (localCheckpoint) are captured from their
+internal plan builders so the file shows the REAL computation plan,
+not a LogicalRDD scan. Reads the tables at $SPARK_GRAFT_SF_DIR.
 
-Usage: python scripts/dump_plans_r16.py before [slug ...]
+Usage: python scripts/dump_plans.py <round> <tag> [slug ...]
 """
 
 from __future__ import annotations
@@ -15,16 +17,19 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> int:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
-    out_dir = os.path.join(REPO, "plans", "r16")
+    if len(sys.argv) < 3:
+        print(__doc__, file=sys.stderr)
+        return 2
+    round_dir, tag = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
+    out_dir = os.path.join(REPO, "plans", round_dir)
     os.makedirs(out_dir, exist_ok=True)
 
     import bench

@@ -5,7 +5,7 @@ import zipfile
 
 import pytest
 
-from oarphpy_spark.sources.archive_v2 import register
+from oarphpy_spark.sources.archive_v2 import MEMBERS_PER_PARTITION, register
 
 
 @pytest.fixture(scope="module")
@@ -28,7 +28,7 @@ def test_read_zip_members(ar_session, tmp_path):
 def test_read_glob_of_archives_partitions(ar_session, tmp_path):
     for i in range(2):
         with zipfile.ZipFile(tmp_path / f"part{i}.zip", "w") as zf:
-            for j in range(4):
+            for j in range(300):
                 zf.writestr(f"doc{i}_{j}.txt", f"text {i} {j}")
     t = tmp_path / "extra.tar.gz"
     with tarfile.open(t, "w:gz") as tf:
@@ -36,11 +36,10 @@ def test_read_glob_of_archives_partitions(ar_session, tmp_path):
         p.write_text("gamma")
         tf.add(p, arcname="c.txt")
 
-    df = ar_session.read.format("archive") \
-        .option("membersperpartition", 2) \
-        .load(str(tmp_path / "*.zip"))
-    assert df.count() == 8
-    # 2 archives x 4 members / 2-per-partition = 4 partitions
+    df = ar_session.read.format("archive").load(str(tmp_path / "*.zip"))
+    assert df.count() == 600
+    # 2 archives x 300 members at 256 per partition = 4 partitions
+    assert MEMBERS_PER_PARTITION == 256
     assert df.rdd.getNumPartitions() == 4
     assert df.select("archive").distinct().count() == 2
 

@@ -192,3 +192,31 @@ def test_tf_summary_df_scan(spark, tmp_path):
         ((r["step"], r["tag"], round(r["simple_value"], 6)) for r in df.collect())
     )
     assert rows == [(0, "loss", 2.0), (1, "loss", 1.5), (1, "lr", 0.01)]
+
+
+def test_wrappers_resolve_relative_paths_on_the_driver(
+    spark, tmp_path, monkeypatch
+):
+    """A Python DataSource plans in a worker whose cwd is the JVM's,
+    not the driver's: each wrapper must resolve a relative path
+    against the driver's working directory before handing it over."""
+    import zipfile
+
+    from oarphpy_spark.sources.archive import archive_df
+    from oarphpy_spark.sources.tfrecords import tfrecords_df
+
+    with zipfile.ZipFile(tmp_path / "rel_fixture.zip", "w") as zf:
+        zf.writestr("a.txt", "alpha")
+    with open(tmp_path / "events.out.tfevents.1.rel", "wb") as f:
+        write_tfrecords(f, [_scalar_event(100.0, 0, [("loss", 2.0)])])
+    monkeypatch.chdir(tmp_path)
+
+    rows = archive_df(spark, "rel_fixture.zip").collect()
+    assert [(r["name"], bytes(r["data"])) for r in rows] == [
+        ("a.txt", b"alpha")
+    ]
+    (rec,) = tfrecords_df(spark, "events.out.*").collect()
+    assert rec["path"] == str(tmp_path / "events.out.tfevents.1.rel")
+    assert rec["record_idx"] == 0
+    (ev,) = tf_summary_df(spark, "events.out.tfevents.1.rel").collect()
+    assert (ev["step"], ev["tag"], ev["simple_value"]) == (0, "loss", 2.0)

@@ -341,3 +341,24 @@ def test_scale_smoke_skew_audit_parses_and_flags(tmp_path):
     assert len(audit["violations"]) == 1
     assert audit["violations"][0]["stage"] == 0
     assert audit["violations"][0]["ratio"] > 10
+
+
+def test_spread_leaves_broadcast_joins_unchanged(spark):
+    """A broadcast join does not shuffle its streamed side, yet its
+    optimized plan holds a ``Join``: ``spread`` classifies it as
+    shuffle-implying and returns it as is (the false positive its
+    docstring documents), without firing a job."""
+    from pyspark.sql import functions as F
+
+    from oarphpy_spark.util.partitioning import spread
+
+    from .conftest import jobs_fired
+
+    a = spark.range(0, 100, numPartitions=1)
+    b = spark.range(0, 10, numPartitions=1)
+    joined = a.join(F.broadcast(b), "id")
+    out, n_jobs = jobs_fired(spark, lambda: spread(joined))
+    assert out is joined
+    assert n_jobs == 0
+    # ... although the join keeps its streamed side's single partition.
+    assert joined.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
