@@ -6,6 +6,10 @@ ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 
 Each query is executed via the `noop` sink so we measure full plan
 execution (scan → shuffle → agg) without driver-collect overhead.
+
+`bench_session` (the session config) and `best_of` (the warm pass plus
+adaptive best-of reps) are the measurement loop `scripts/measure.py`
+reuses for slug timings, A/B arms and plan dumps.
 """
 
 from __future__ import annotations
@@ -150,26 +154,23 @@ def _settle_load(max_load: float, max_wait_sec: float) -> tuple[float, float, bo
     return round(initial, 2), round(load, 2), load > max_load
 
 
-def main() -> None:
-    # Sample load BEFORE the run: the bench itself pins all cores, so
-    # a reading at finish only measures the bench. What matters is
-    # what ELSE was running when the timings were taken.
-    max_load = float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0"))
-    max_wait = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT_SEC", "600"))
-    load_initial, load_before, contaminated = _settle_load(max_load, max_wait)
+def _sf_dir_cpus() -> tuple[str, int]:
+    """The data directory and core count every measurement reads from
+    the environment: $SPARK_GRAFT_SF_DIR (default sf0.1) and
+    $SPARK_GRAFT_CPUS (default: this host's core count)."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1).rstrip(".")) if m else -1.0
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    return sf_dir, cpus
 
-    from oarphpy_spark import registry
+
+def bench_session(sf_dir: str, cpus: int):
+    """The bench's SessionFactory: the engine defaults plus scan splits
+    sized to the benchmark data so every core participates — target ~3
+    splits per core of the largest table, clamped to [1 MiB, 128 MiB].
+    (128 MiB — the stock default — is right for a real cluster reading
+    100 TB; a 10 MB local file would scan as ONE task under it.)"""
     from oarphpy_spark.session import SessionFactory
 
-    # Size scan splits to the benchmark data so every core participates:
-    # target ~3 splits per core of the largest table, clamped to
-    # [1 MiB, 128 MiB]. (128 MiB — the stock default — is right for a
-    # real cluster reading 100 TB; a 10 MB local file would scan as ONE
-    # task under it.)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     biggest = max(
         (os.path.getsize(os.path.join(sf_dir, f)) for f in os.listdir(sf_dir)),
         default=128 << 20,
@@ -192,13 +193,24 @@ def main() -> None:
             },
         )
 
-    spark = BenchSession.getOrCreate()
-    qs = registry.queries()
+    return BenchSession
 
-    # Warm every plan once (codegen JIT, parquet footers, Python worker
-    # pools), then record best-of-3 steady-state — min is the standard
-    # low-variance estimator for a fixed workload (single-pass wall
-    # time swung ±20% run-to-run on the same data).
+
+def best_of(
+    spark,
+    qs: dict,
+    sf_dir: str,
+    names: list[str],
+    reps: int,
+    max_reps: int,
+    agree_tol: float = 0.10,
+) -> tuple[dict[str, float], dict[str, dict]]:
+    """Warm every plan once (codegen JIT, parquet footers, Python worker
+    pools), then record the best of the timed reps — min is the
+    standard low-variance estimator for a fixed workload (single-pass
+    wall time swung ±20% run-to-run on the same data). Each query runs
+    through the `noop` sink. Returns ``(timings, detail)``: the per-name
+    min and its ``n_reps``/``spread``/``warm_sec``/``times``."""
     from oarphpy_spark.llm.dedup import release_cached
 
     def run(name: str):
@@ -206,68 +218,81 @@ def main() -> None:
         df.write.mode("overwrite").format("noop").save()
         return df
 
-    def best_of(
-        names: list[str],
-        reps: int,
-        max_reps: int,
-        agree_tol: float = 0.10,
-    ) -> tuple[dict[str, float], dict[str, dict]]:
-        # Per-name: warm pass + all timed reps run WITHOUT releasing the
-        # `_oarphpy_persisted` ride-along caches, so timed reps reuse the
-        # subtrees the warm pass persisted (the CacheManager matches
-        # semantically-equal plans, so a re-invoked query's persist()
-        # hits the warm entry).  This is the r01-r09 measurement
-        # semantics the baseline was recorded under.  Caches are
-        # released only BETWEEN different queries — that is the only
-        # place a lingering cache could contaminate a timing (query A's
-        # cache inflating query B wherever their plans share a
-        # fragment).  SQL-cached plans are held by the CacheManager
-        # until explicit unpersist, so the release is mandatory hygiene,
-        # not optional.
-        #
-        # Adaptive agreement (r12: the driver bench recorded 1.8x the
-        # idle wall of the same HEAD under multi-second host stalls
-        # that hit ALL fixed reps): after the minimum reps, keep
-        # re-running while the two FASTEST reps disagree by more than
-        # `agree_tol` — two independent executions within 10% of each
-        # other are overwhelmingly unlikely to both be stall-inflated.
-        # Capped at `max_reps`; the per-query spread is reported so a
-        # still-disagreeing timing is visibly untrustworthy.
-        timings: dict[str, float] = {}
-        detail: dict[str, dict] = {}
-        for name in names:
-            # The warm pass is timed SEPARATELY (warm_sec): for
-            # ride-along-cache operators it includes the cache build,
-            # so a round where timed reps missed the warm cache shows
-            # up as rep times near warm_sec instead of a silent
-            # bimodal headline (VERDICT r13 item 6 — the
-            # q_set_similarity_join 0.8–6.9 s flapping).
+    # Per-name: warm pass + all timed reps run WITHOUT releasing the
+    # `_oarphpy_persisted` ride-along caches, so timed reps reuse the
+    # subtrees the warm pass persisted (the CacheManager matches
+    # semantically-equal plans, so a re-invoked query's persist()
+    # hits the warm entry).  This is the r01-r09 measurement
+    # semantics the baseline was recorded under.  Caches are
+    # released only BETWEEN different queries — that is the only
+    # place a lingering cache could contaminate a timing (query A's
+    # cache inflating query B wherever their plans share a
+    # fragment).  SQL-cached plans are held by the CacheManager
+    # until explicit unpersist, so the release is mandatory hygiene,
+    # not optional.
+    #
+    # Adaptive agreement (r12: a recorded bench run took 1.8x the
+    # idle wall of the same HEAD under multi-second host stalls
+    # that hit ALL fixed reps): after the minimum reps, keep
+    # re-running while the two FASTEST reps disagree by more than
+    # `agree_tol` — two independent executions within 10% of each
+    # other are overwhelmingly unlikely to both be stall-inflated.
+    # Capped at `max_reps`; the per-query spread is reported so a
+    # still-disagreeing timing is visibly untrustworthy.
+    timings: dict[str, float] = {}
+    detail: dict[str, dict] = {}
+    for name in names:
+        # The warm pass is timed SEPARATELY (warm_sec): for
+        # ride-along-cache operators it includes the cache build,
+        # so a round where timed reps missed the warm cache shows
+        # up as rep times near warm_sec instead of a silent
+        # bimodal headline (VERDICT r13 item 6 — the
+        # q_set_similarity_join 0.8–6.9 s flapping).
+        t0 = time.perf_counter()
+        dfs = [run(name)]  # warm pass (builds caches, codegen, pools)
+        warm_sec = round(time.perf_counter() - t0, 4)
+        times: list[float] = []
+        while _needs_another_rep(times, reps, max_reps, agree_tol):
             t0 = time.perf_counter()
-            dfs = [run(name)]  # warm pass (builds caches, codegen, pools)
-            warm_sec = round(time.perf_counter() - t0, 4)
-            times: list[float] = []
-            while _needs_another_rep(times, reps, max_reps, agree_tol):
-                t0 = time.perf_counter()
-                dfs.append(run(name))
-                times.append(round(time.perf_counter() - t0, 4))
-            s = sorted(times)
-            timings[name] = s[0]
-            detail[name] = {
-                "n_reps": len(times),
-                "spread": round(s[1] / s[0] - 1, 4) if s[0] else 0.0,
-                "warm_sec": warm_sec,
-                "times": times,
-            }
-            for df in dfs:  # release between queries only
-                try:
-                    release_cached(df)
-                except Exception:  # noqa: BLE001 — teardown must not kill the bench
-                    pass
-        return timings, detail
+            dfs.append(run(name))
+            times.append(round(time.perf_counter() - t0, 4))
+        s = sorted(times)
+        timings[name] = s[0]
+        detail[name] = {
+            "n_reps": len(times),
+            "spread": (
+                round(s[1] / s[0] - 1, 4) if len(s) > 1 and s[0] else 0.0
+            ),
+            "warm_sec": warm_sec,
+            "times": times,
+        }
+        for df in dfs:  # release between queries only
+            try:
+                release_cached(df)
+            except Exception:  # noqa: BLE001 — teardown must not kill the bench
+                pass
+    return timings, detail
+
+
+def main() -> None:
+    # Sample load BEFORE the run: the bench itself pins all cores, so
+    # a reading at finish only measures the bench. What matters is
+    # what ELSE was running when the timings were taken.
+    max_load = float(os.environ.get("SPARK_GRAFT_MAX_LOAD", "2.0"))
+    max_wait = float(os.environ.get("SPARK_GRAFT_LOAD_WAIT_SEC", "600"))
+    load_initial, load_before, contaminated = _settle_load(max_load, max_wait)
+    sf_dir, cpus = _sf_dir_cpus()
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1).rstrip(".")) if m else -1.0
+
+    from oarphpy_spark import registry
+
+    spark = bench_session(sf_dir, cpus).getOrCreate()
+    qs = registry.queries()
 
     steal0, total0 = _steal_jiffies()
     timings, rep_detail = best_of(
-        [n for n in HEADLINE if n in qs], reps=3, max_reps=6
+        spark, qs, sf_dir, [n for n in HEADLINE if n in qs], reps=3, max_reps=6
     )
     # Graph-family members share one localCheckpointed edge relation
     # per (session, sf_dir). Prewarm it ONCE and report its build cost
@@ -289,7 +314,7 @@ def main() -> None:
     # queries' cost; best-of-2 after a warm pass is still a
     # steady-state floor), topped up to 4 only on disagreement.
     extras, extras_detail = best_of(
-        [n for n in EXTRAS if n in qs], reps=2, max_reps=4
+        spark, qs, sf_dir, [n for n in EXTRAS if n in qs], reps=2, max_reps=4
     )
     release_shared_edges(spark)
     # Same hygiene for the dedup-LSH family's session-shared bucket
